@@ -56,12 +56,17 @@ def save_model_artifact(path: str, state: dict) -> None:
 
     The write is ATOMIC (temp file + ``os.replace``): concurrent
     harnesses sharing the scratch dir must never let an executor's
-    lazy load race a half-written zip."""
+    lazy load race a half-written zip. A file that already holds
+    exactly ``state``'s arrays is left alone: a rewrite would give it a
+    new mtime, and with it evict every worker's
+    :func:`load_artifact_cached` entry for the path."""
     import os
     import tempfile
 
     import numpy as np
 
+    if _artifact_holds(path, state):
+        return
     fd, tmp = tempfile.mkstemp(
         dir=os.path.dirname(path) or ".", suffix=".npz.tmp"
     )
@@ -73,6 +78,24 @@ def save_model_artifact(path: str, state: dict) -> None:
         if os.path.exists(tmp):
             os.unlink(tmp)
         raise
+
+
+def _artifact_holds(path: str, state: dict) -> bool:
+    """Whether ``path`` is an ``.npz`` holding exactly ``state``: the
+    same names, and per name the same dtype, shape and bytes."""
+    import numpy as np
+
+    try:
+        with np.load(path) as z:
+            if set(z.files) != set(state):
+                return False
+            for k, v in state.items():
+                a, b = z[k], np.asarray(v)
+                if a.dtype != b.dtype or a.shape != b.shape or a.tobytes() != b.tobytes():
+                    return False
+            return True
+    except Exception:  # noqa: BLE001 — missing or unreadable: rewrite it
+        return False
 
 
 def load_model_artifact(path: str) -> dict:

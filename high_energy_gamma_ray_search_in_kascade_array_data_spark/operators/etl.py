@@ -20,6 +20,8 @@ histogram aggregate.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -48,28 +50,46 @@ def stratified_split_assign(
     )
 
 
-def augment_rotations(
-    train: DataFrame, fraction: float, draw: F.Column, k_values: tuple[int, ...] = (1, 2, 3)
+def explode_rotations(
+    df: DataFrame, admits: Callable[[F.Column], F.Column], k_values: tuple[int, ...] = (1, 2, 3)
 ) -> DataFrame:
-    """Sample-then-rotate augmentation (X2 + T2 + T4): per rotation k,
-    keep ~fraction of train rows by the deterministic ``draw(k)`` and
-    rotate azimuth/core in closed form. Returns train ∪ rotated
-    copies with a ``k`` provenance column."""
-    parts = [train.withColumn("k", F.lit(0))]
-    for k in k_values:
-        az = physics.rotate_azimuth(F.col("az"), k)
-        cx, cy = physics.rotate_core(F.col("core_x"), F.col("core_y"), k)
-        rotated = (
-            train.filter((draw + F.lit(k) * 0.1) % 1 < fraction)
-            .withColumn("az", az)
-            .withColumn("core_x", cx)
-            .withColumn("core_y", cy)
-            .withColumn("k", F.lit(k))
-        )
-        parts.append(rotated)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    """One row per rotation index the row admits, in a new int column
+    ``k``: always 0, plus each k of ``k_values`` for which
+    ``admits(k)`` holds (``k`` arrives as an integer lambda variable).
+    Every copy comes from one pass over ``df`` — a union of per-k
+    branches would re-run ``df``'s whole plan once per branch."""
+    ks = F.filter(F.array(*[F.lit(k) for k in (0, *k_values)]), lambda k: (k == 0) | admits(k))
+    return df.withColumn("k", F.explode(ks))
+
+
+def case_on_k(per_k: dict[int, F.Column], default: F.Column) -> F.Column:
+    """``CASE k WHEN k1 THEN per_k[k1] ... ELSE default END``."""
+    k = F.col("k")
+    out = None
+    for kv, value in per_k.items():
+        out = F.when(k == kv, value) if out is None else out.when(k == kv, value)
+    return out.otherwise(default)
+
+
+def augment_rotations(
+    df: DataFrame,
+    eligible: F.Column,
+    fraction: float,
+    draw: F.Column,
+    k_values: tuple[int, ...] = (1, 2, 3),
+) -> DataFrame:
+    """Sample-then-rotate augmentation (X2 + T2 + T4): every row stays
+    as k=0; per rotation k, ~fraction of the ``eligible`` rows whose
+    deterministic ``draw`` passes also appear with azimuth/core rotated
+    in closed form. Returns the rows with a ``k`` provenance column."""
+    out = explode_rotations(df, lambda k: eligible & ((draw + k * 0.1) % 1 < fraction), k_values)
+    rotated = {
+        k: (physics.rotate_azimuth(F.col("az"), k),)
+        + physics.rotate_core(F.col("core_x"), F.col("core_y"), k)
+        for k in k_values
+    }
+    for i, c in enumerate(("az", "core_x", "core_y")):
+        out = out.withColumn(c, case_on_k({k: r[i] for k, r in rotated.items()}, F.col(c)))
     return out
 
 
@@ -93,10 +113,8 @@ def prepare_datasets(
     ``create_train_valid_test_datasets.py:78-80``). Tests use two
     different integer hashes so the DuckDB oracle replays both."""
     split = stratified_split_assign(shower, rnd=rnd)
-    train = split.filter(F.col("split") == "train")
-    rest = split.filter(F.col("split") != "train").withColumn("k", F.lit(0))
-    augmented = augment_rotations(train, augment_fraction, draw=aug_draw)
-    return add_direction_features(augmented.unionByName(rest))
+    train = F.col("split") == "train"
+    return add_direction_features(augment_rotations(split, train, augment_fraction, aug_draw))
 
 
 def analysis_pipeline(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.functions import physics
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators import etl
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.survival import histogram, survival_curve
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import (
     GRID_CTE,
@@ -349,21 +350,17 @@ def q_augment_rotations(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic multiplicative-hash draw so the oracle reproduces the
     sample exactly."""
     grid = detector_grid(spark, sf_dir)
-    parts = [
-        grid.select(F.lit(0).cast("int").alias("k"), "event_id", "ix", "iy", "edep")
-    ]
-    for k in (1, 2, 3):
-        draw = (F.col("event_id") % 2147483648) * (2654435761 + k) % 4294967296 / F.lit(4294967296.0)
-        sampled = grid.filter(draw < 0.3)
-        rx, ry = physics.rotate_grid_index(F.col("ix"), F.col("iy"), k)
-        parts.append(
-            sampled.select(
-                F.lit(k).cast("int").alias("k"), "event_id", rx.alias("ix"), ry.alias("iy"), "edep"
-            )
-        )
-    aug = parts[0]
-    for p in parts[1:]:
-        aug = aug.unionByName(p)
+    draw = lambda k: (  # noqa: E731
+        (F.col("event_id") % 2147483648) * (F.lit(2654435761) + k) % 4294967296 / F.lit(4294967296.0)
+    )
+    aug = etl.explode_rotations(grid, lambda k: draw(k) < 0.3)
+    rotated = {k: physics.rotate_grid_index(F.col("ix"), F.col("iy"), k) for k in (1, 2, 3)}
+    aug = aug.select(
+        "k",
+        etl.case_on_k({k: r[0] for k, r in rotated.items()}, F.col("ix")).alias("ix"),
+        etl.case_on_k({k: r[1] for k, r in rotated.items()}, F.col("iy")).alias("iy"),
+        "edep",
+    )
     return aug.groupBy("k").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.sum(F.col("edep") * (F.col("iy") * 16 + F.col("ix"))), 4).alias("checksum"),

@@ -25,8 +25,10 @@ def get_spark(
     # worker_site dir on PYTHONPATH *before* the JVM launches lets its
     # sitecustomize install the protobuf shim inside every worker —
     # which is where transformWithStateInPandas' state-protocol client
-    # runs. No-op when the real protobuf package exists (the shim
-    # checks first) or when the session already started. The mutation
+    # runs — and keep workers from re-reading every zip and jar
+    # directory on sys.path before each task. The shim is a no-op when
+    # the real protobuf package exists (it checks first); all of this
+    # is a no-op when the session already started. The mutation
     # is scoped: the prior PYTHONPATH is restored after getOrCreate so
     # the worker_site dir (and its sitecustomize) does not leak into
     # non-Spark subprocesses spawned later from this driver (ADVICE
@@ -65,6 +67,15 @@ def get_spark(
         # the driver's events fixture stores ts as TIMESTAMP(NANOS),
         # which vanilla Spark refuses — read as long, convert in catalog
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # No native Hadoop library loads here, so Hadoop's local file
+        # system shells out for link status and permissions. The default
+        # FileContext-based manager asks for link status on every
+        # checkpoint rename (one `readlink` fork per file); the
+        # FileSystem-based one renames without it.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+        )
     )
     # launch-time-only confs (event log, memory overrides) callers such
     # as the skew probe need; no-ops when the session already exists

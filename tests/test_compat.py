@@ -16,6 +16,7 @@ import importlib.util
 import os
 import sys
 
+import pandas as pd
 import pytest
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.compat import pbshim
@@ -120,3 +121,68 @@ def test_install_is_idempotent_and_reports_availability(google_import_state):
 def test_worker_site_dir_has_sitecustomize():
     d = pbshim.worker_site_dir()
     assert os.path.isfile(os.path.join(d, "sitecustomize.py"))
+
+
+_ZIP_PROBE = r"""
+import importlib, json, sys, zipfile, zipimport
+
+archive = sys.argv[1]
+reads = []
+_read = zipimport._read_directory
+zipimport._read_directory = lambda path: reads.append(path) or _read(path)
+sys.path.insert(0, archive)
+import first_mod  # noqa: F401  (creates the importer)
+importlib.invalidate_caches()  # the importer's first call reads and keys
+reads.clear()
+for _ in range(5):
+    importlib.invalidate_caches()
+unchanged = len(reads)
+with zipfile.ZipFile(archive, "a") as z:  # new size, new mtime
+    z.writestr("second_mod.py", "VALUE = 2\n")
+importlib.invalidate_caches()
+changed = len(reads)
+import second_mod
+
+print(json.dumps({
+    "wrapped": hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__"),
+    "unchanged": unchanged,
+    "changed": changed,
+    "value": second_mod.VALUE,
+}))
+"""
+
+
+def test_worker_site_skips_rereading_unchanged_zips(tmp_path):
+    """pyspark invalidates import caches before every Python task; the
+    worker sitecustomize must keep that from re-reading an unchanged
+    zip's directory, yet re-read it (and import its new modules) once
+    the zip changes."""
+    import json
+    import subprocess
+    import zipfile
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("first_mod.py", "VALUE = 1\n")
+    env = dict(os.environ, PYTHONPATH=pbshim.worker_site_dir())
+    out = subprocess.run(
+        [sys.executable, "-c", _ZIP_PROBE, archive],
+        env=env, capture_output=True, text=True, check=True, timeout=60,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"wrapped": True, "unchanged": 0, "changed": 1, "value": 2}, out
+
+
+def test_pandas_udf_workers_run_the_zip_guard(spark):
+    """The guard reaches the Python workers of a ``get_spark()`` session."""
+    import pyspark.sql.functions as F
+
+    @F.pandas_udf("boolean")
+    def guarded(x: pd.Series) -> pd.Series:
+        import zipimport
+
+        wrapped = hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")
+        return pd.Series([wrapped] * len(x))
+
+    rows = spark.range(4).select(guarded("id").alias("g")).collect()
+    assert [r["g"] for r in rows] == [True] * 4

@@ -256,3 +256,39 @@ def test_cnn_artifact_executor_roundtrip(spark, sf_dir):
     muons = np.stack([((e * (m + 13)) % 89) / 16.0 for e in eids]).reshape(-1, 16, 16)
     logit = cnn.cnn_forward(state, feats, np.stack([edep, muons], axis=1))
     assert pdf["logit"].to_numpy().tolist() == logit.tolist()
+
+
+def test_query_builds_leave_model_artifacts_untouched(spark, sf_dir):
+    """Building an artifact-scoring query twice must not rewrite its
+    artifact: a new mtime evicts every worker's cached load."""
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import corpus
+
+    queries = {"cnn_artifact_inference": "cnn_b.npz", "mlp_artifact_inference": "mlp_head.npz"}
+    for name, artifact in queries.items():
+        corpus()[name].fn(spark, sf_dir)
+        before = os.stat(os.path.join(SCRATCH, artifact)).st_mtime_ns
+        corpus()[name].fn(spark, sf_dir)
+        assert os.stat(os.path.join(SCRATCH, artifact)).st_mtime_ns == before, name
+
+
+def test_save_model_artifact_replaces_only_other_arrays(tmp_path):
+    """An artifact holding other arrays is replaced; one holding the
+    same arrays keeps its file."""
+    import numpy as np
+
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml import inference
+
+    path = str(tmp_path / "m.npz")
+    state = {"w": np.arange(6, dtype="float64").reshape(2, 3), "b": np.zeros(2)}
+    inference.save_model_artifact(path, {"w": np.ones((2, 3)), "b": np.zeros(2)})
+    old = os.stat(path)
+    inference.save_model_artifact(path, state)
+    new = os.stat(path)
+    assert new.st_ino != old.st_ino  # replaced by a new file
+    loaded = inference.load_model_artifact(path)
+    assert set(loaded) == set(state) and all(np.array_equal(loaded[k], state[k]) for k in state)
+    inference.save_model_artifact(path, state)
+    assert os.stat(path).st_ino == new.st_ino and os.stat(path).st_mtime_ns == new.st_mtime_ns
+    # the same values under another dtype are other arrays
+    inference.save_model_artifact(path, {"w": state["w"].astype("float32"), "b": state["b"]})
+    assert os.stat(path).st_ino != new.st_ino

@@ -14,7 +14,11 @@ from high_energy_gamma_ray_search_in_kascade_array_data_spark.plans import (
     assert_pushed_filters,
     physical_plan,
 )
-from high_energy_gamma_ray_search_in_kascade_array_data_spark.plans.audit import assert_columns_pruned
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.plans.audit import (
+    _tree_nodes,
+    assert_columns_pruned,
+    simple_plan,
+)
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import corpus
 
 _C = corpus()
@@ -22,6 +26,26 @@ _C = corpus()
 
 def _q(name, spark, sf_dir):
     return _C[name].fn(spark, sf_dir)
+
+
+def _nodes(df, prefix: str, also: str = "") -> list[str]:
+    """Physical-plan nodes starting with ``prefix`` (and containing ``also``)."""
+    return [t for _, t in _tree_nodes(simple_plan(df)) if t.startswith(prefix) and also in t]
+
+
+def test_prepare_datasets_runs_the_split_window_once(spark, sf_dir):
+    """Every augmented copy comes from one pass over the split frame:
+    a union of per-rotation branches re-runs the Sort and the
+    percent_rank Window once per branch, even when the shuffle below
+    them is reused."""
+    windows = _nodes(_q("etl_prepare_datasets", spark, sf_dir), "Window")
+    assert len(windows) == 1, windows
+
+
+def test_augment_rotations_scans_events_once(spark, sf_dir):
+    """All four rotations of the grid come from one scan of events."""
+    scans = _nodes(_q("augment_rotations", spark, sf_dir), "FileScan", "events")
+    assert len(scans) == 1, scans
 
 
 def test_q6_filters_pushed_to_parquet(spark, sf_dir):

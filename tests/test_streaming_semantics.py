@@ -600,3 +600,16 @@ def test_scoped_stream_confs_do_not_leak_to_concurrent_starts(spark, sf_dir):
     t1.join()
     t2.join()
     assert res["l"] == solo
+
+
+def test_checkpoints_use_the_file_system_based_manager(spark):
+    """The session's checkpoint manager renames without asking for link
+    status: the FileContext-based default forks a `readlink` per rename
+    when no native Hadoop library loads. The restart and mid-batch
+    recovery tests above run under this manager."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(os.path.join(SCRATCH, "ckpt_manager_probe")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
